@@ -15,6 +15,7 @@ Unsupported constructs raise UnsupportedDialect with the construct named
 
 from __future__ import annotations
 
+import functools
 import re
 
 
@@ -4819,10 +4820,43 @@ def _rewrite_collate(sql: str) -> str:
     return _rewrite_code(sql, lambda chunk: _COLLATE_RE.sub(repl, chunk))
 
 
+# translate() memo bounds. Entries: the service re-sends the same few
+# statements (and their LIMIT-0 probe texts), so a small working set
+# covers them. Input length: DML translates whole INSERT ... VALUES
+# clauses, whose text (and output, up to ~17x the input) would otherwise
+# pin megabytes per entry.
+_MEMO_ENTRIES = 1024
+_MEMO_MAX_INPUT = 8192
+
+
 def translate(sql: str) -> str:
     """DuckDB dialect → Spark SQL. Raises UnsupportedDialect for constructs
     that need the DataFrame-level operators (operators/asof.py,
-    operators/recursive.py) — callers route those explicitly."""
+    operators/recursive.py) — callers route those explicitly.
+
+    Memoized (bounded LRU; exceptions are not cached). Purity contract:
+    the output depends only on the input text and
+    ``WINDOW_FRAME_ELEMENT_BOUND``, which together form the memo key. A
+    pass that reads any other state (session, catalog, clock, settings)
+    must add that state to the key in this function."""
+    if len(sql) > _MEMO_MAX_INPUT:
+        return _translate(sql)
+    return _translate_memo(sql, WINDOW_FRAME_ELEMENT_BOUND)
+
+
+@functools.lru_cache(maxsize=_MEMO_ENTRIES)
+def _translate_memo(sql: str, frame_bound: int) -> str:
+    # frame_bound is key only: _frame_guard reads the global itself
+    return _translate(sql)
+
+
+def memo_info() -> dict:
+    """translate() memo counters, as served under ``/status``."""
+    info = _translate_memo.cache_info()
+    return {"hits": info.hits, "misses": info.misses, "entries": info.currsize}
+
+
+def _translate(sql: str) -> str:
     _original = sql  # for current_query() — the verbatim submitted text
     # DuckDB standard string literals are VERBATIM ('\d' is backslash-d);
     # Spark's parser treats backslash as an escape ('\d' parses to 'd') —

@@ -1242,7 +1242,9 @@ class Engine:
                 # rewrites (dialect._frame_guard); <= 0 disables the
                 # guard. PROCESS-WIDE: translate() is a module-level
                 # pipeline with no engine context, so the bound applies
-                # to every Engine in the process (like a Spark conf).
+                # to every Engine in the process (like a Spark conf). It
+                # is part of translate()'s memo key, so text translated
+                # under the old bound is not served after this SET.
                 from . import dialect as _dialect
 
                 try:

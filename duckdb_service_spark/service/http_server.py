@@ -3,7 +3,8 @@ it matters (http/service.go):
 
   POST /db/execute  {"sql": ...} → {"result": {"rows_affected": n}, "took": s}
   POST|GET /db/query {"sql": ...} → {"result": {"columns","types","values"}, "took": s}
-  GET  /status                   → node + store stats (service.go:144-193)
+  GET  /status                   → node + store stats (service.go:144-193),
+                                   plus the SQL front end's memo counters
   POST /join                     → 501 (no consensus layer; SURVEY §2.1 S4)
   ?pretty                        → indented JSON (service.go:296-337)
 
@@ -19,6 +20,7 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from .dialect import memo_info
 from .executor import Engine
 from .serializer import duck_error_text, execute_result, query_result
 
@@ -117,6 +119,7 @@ class EngineHTTPServer:
                     "engine": outer.engine.catalog.status(),
                     "uptime_s": time.time() - outer.start_time,
                     "addr": f"{outer.host}:{outer.port}",
+                    "frontend": memo_info(),
                 }
                 self._send(200, status, self._pretty())
 

@@ -116,6 +116,13 @@ def test_status_endpoint(server):
     assert "abc" in s["engine"]["tables"]
     assert s["uptime_s"] >= 0
     assert s["engine"]["spark_version"]
+    # the fixture's statements went through translate(): its memo counts them
+    memo = s["frontend"]
+    assert set(memo) == {"hits", "misses", "entries"}
+    assert memo["misses"] >= 1 and 1 <= memo["entries"] <= memo["misses"]
+    _post(server, "/db/query", "SELECT * FROM abc")
+    again = _get(server, "/status")["frontend"]
+    assert again["hits"] > memo["hits"]
 
 
 def test_join_returns_501(server):
